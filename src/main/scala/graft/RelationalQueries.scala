@@ -700,16 +700,19 @@ object RelationalQueries {
     // query norm is folded once on the driver with the same left-to-right
     // IEEE summation the aggregate() HOF uses, so every emitted value is
     // bit-identical; per-row work drops from 3 dot passes to 2.
+    // With no query row (vec_id 0) the result is empty, with the same schema:
+    // a placeholder vector keeps the plan's types, and no row passes the filter.
     "q_cosine_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
         .withColumn("v", transform(col("embedding"), x => x.cast("double")))
-      val qv: Array[Double] = emb.filter(col("vec_id") === 0)
-        .select(col("v")).first().getSeq[Double](0).toArray
+      val qRow = emb.filter(col("vec_id") === 0).select(col("v")).take(1)
+      val qv: Array[Double] = qRow.headOption.map(_.getSeq[Double](0).toArray)
+        .getOrElse(Array(0.0))
       val qNorm = math.sqrt(qv.foldLeft(0.0)((acc, x) => acc + x * x))
       val qvCol = array(qv.map(lit): _*)
       def dot(x: Column, y: Column): Column =
         aggregate(zip_with(x, y, (a, b) => a * b), lit(0.0), (acc, v) => acc + v)
-      emb.filter(col("vec_id") =!= 0)
+      emb.filter(if (qRow.isEmpty) lit(false) else col("vec_id") =!= 0)
         .select(col("vec_id"),
           round(dot(col("v"), qvCol) /
             (sqrt(dot(col("v"), col("v"))) * lit(qNorm)), 4)

@@ -21,11 +21,11 @@ object TokenizeProbe {
           var i = counter.getAndIncrement()
           var acc = 0L
           while (i < n) {
-            // the docstats-shaped workload: termFreqs over all three fields
+            // the docstats-shaped workload: analysis of all three fields
             val c = docs(i.toInt)
-            acc += graft.index.IndexBuilder.termFreqs("content", c)._1
-            acc += graft.index.IndexBuilder.termFreqs("path", s"src/pkg/mod/File$i.scala")._1
-            acc += graft.index.IndexBuilder.termFreqs("repo", "repo-0001")._1
+            acc += graft.analysis.Analyzer.analyzeField("content", c).length
+            acc += graft.analysis.Analyzer.analyzeField("path", s"src/pkg/mod/File$i.scala").length
+            acc += graft.analysis.Analyzer.analyzeField("repo", "repo-0001").length
             i = counter.getAndIncrement()
           }
           sink.addAndGet(acc)
@@ -41,6 +41,6 @@ object TokenizeProbe {
     val r8 = run(8)
     val r16 = run(16)
     val r32 = run(32)
-    println(f"raw termFreqs scaling 4->16: ${r16 / r4}%.2fx, 8->32: ${r32 / r8}%.2fx (ideal 4x)")
+    println(f"raw analysis scaling 4->16: ${r16 / r4}%.2fx, 8->32: ${r32 / r8}%.2fx (ideal 4x)")
   }
 }

@@ -49,8 +49,14 @@ object Analyzer extends Serializable {
 
   /** UAX#29 word segments with a non-NONE rule status (letters, numbers,
     * kana, ideographs). Mirrors ICUTokenizer's DefaultICUTokenizerConfig.
+    * All-ASCII regions take the exact fast path ([[segment]]).
     */
-  def tokenize(text: String): Array[String] = {
+  def tokenize(text: String): Array[String] = segment(text, analyzed = false)
+
+  /** The ICU-only tokenizer: the reference the ASCII fast path must match
+    * token for token, and the path every non-ASCII region takes.
+    */
+  private[graft] def tokenizeIcu(text: String): Array[String] = {
     if (text == null || text.isEmpty) return Array.empty
     val bi = wordBreak.get().asInstanceOf[RuleBasedBreakIterator]
     bi.setText(text)
@@ -65,6 +71,136 @@ object Analyzer extends Serializable {
       end = bi.next()
     }
     out.toArray
+  }
+
+  // ---- ASCII fast path ----
+  //
+  // UAX#29 word-break classes of the ASCII chars (WordBreakProperty.txt).
+  // `:` is MidLetter (ICU's root rules join `a:b` into one word), a class
+  // that locales tailor; rather than pin that, a region holding `:` takes
+  // the ICU path, like any region holding a non-ASCII char.
+  private final val WbOther = 0
+  private final val WbLetter = 1    // ALetter: A-Z a-z
+  private final val WbDigit = 2     // Numeric: 0-9
+  private final val WbExtend = 3    // ExtendNumLet: _
+  private final val WbMidNumLet = 4 // MidNumLet `.`, Single_Quote `'`
+  private final val WbMidNum = 5    // MidNum `,` `;`
+  private final val WbSpace = 6     // ASCII whitespace: always a word break
+  private final val WbIcu = 7       // `:` (and, via wbClass, any non-ASCII char)
+
+  private val asciiClass: Array[Byte] = {
+    val t = new Array[Byte](128)
+    var c = 0
+    while (c < 128) {
+      t(c) = (c.toChar match {
+        case x if (x >= 'a' && x <= 'z') || (x >= 'A' && x <= 'Z') => WbLetter
+        case x if x >= '0' && x <= '9' => WbDigit
+        case '_' => WbExtend
+        case '.' | '\'' => WbMidNumLet
+        case ',' | ';' => WbMidNum
+        case ' ' | '\t' | '\n' | '\r' | '\u000b' | '\f' => WbSpace
+        case ':' => WbIcu
+        case _ => WbOther
+      }).toByte
+      c += 1
+    }
+    t
+  }
+
+  @inline private def wbClass(c: Char): Int = if (c >= 0x80) WbIcu else asciiClass(c)
+
+  @inline private def isWordClass(k: Int): Boolean = k >= WbLetter && k <= WbExtend
+
+  /** Segment `text` and, when `analyzed`, run the text_en chain on each
+    * token; the result equals the ICU chain's exactly.
+    *
+    * The text splits into regions at ASCII whitespace, which UAX#29 always
+    * breaks on both sides of: no rule joins a whitespace char to a word
+    * char, and an Extend/Format char after whitespace attaches to the
+    * whitespace, never to the next word. So each region segments on its own.
+    * An all-ASCII region (without `:`) runs a UAX#29 state machine over the
+    * ASCII classes: a word is a maximal run of letters, digits and `_`
+    * (WB5, WB8-10, WB13a/b) that also spans one MidNumLet between two
+    * letters (WB6/7) or one MidNum/MidNumLet between two digits (WB11/12).
+    * Every such word has a non-NONE rule status except a lone `_`. The
+    * token is lowercased (NFKC_Casefold on ASCII), possessive-stripped and
+    * stemmed in place on a char copy of the text, so it costs one String.
+    * A region holding any other char drops the tokens it has emitted and
+    * goes through ICU.
+    */
+  private def segment(text: String, analyzed: Boolean): Array[String] = {
+    if (text == null || text.isEmpty) return Array.empty
+    // one bulk copy; analyzed tokens are then lowercased and stemmed in place
+    val cs = text.toCharArray
+    val n = cs.length
+    val out = new ArrayBuffer[String](math.max(16, n >> 3))
+    var mark = 0 // out.length at the start of the current region
+    var regionStart = 0
+    var i = 0
+    while (i < n) {
+      val k = wbClass(cs(i))
+      if (k == WbSpace) {
+        i += 1
+        regionStart = i
+        mark = out.length
+      } else if (k == WbIcu) {
+        out.dropRightInPlace(out.length - mark)
+        var end = i + 1
+        while (end < n && wbClass(cs(end)) != WbSpace) end += 1
+        val region = text.substring(regionStart, end)
+        out ++= (if (analyzed) analyzeIcu(region) else tokenizeIcu(region))
+        i = end
+      } else if (!isWordClass(k)) {
+        i += 1
+      } else {
+        val start = i
+        var prev = k
+        i += 1
+        var inWord = true
+        while (inWord && i < n) {
+          val k2 = wbClass(cs(i))
+          if (isWordClass(k2)) { prev = k2; i += 1 }
+          else if ((k2 == WbMidNumLet || k2 == WbMidNum) && i + 1 < n) {
+            val k3 = wbClass(cs(i + 1))
+            if ((prev == WbLetter && k2 == WbMidNumLet && k3 == WbLetter) ||
+                (prev == WbDigit && k3 == WbDigit)) { prev = k3; i += 2 }
+            else inWord = false
+          } else inWord = false
+        }
+        if (i - start > 1 || k != WbExtend) {
+          if (!analyzed) out += text.substring(start, i)
+          else {
+            var j = start
+            while (j < i) {
+              val c = cs(j)
+              if (c >= 'A' && c <= 'Z') cs(j) = (c + 32).toChar
+              j += 1
+            }
+            var end = i
+            if (end - start >= 2 && cs(end - 1) == 's' && cs(end - 2) == '\'') end -= 2
+            end = stemAscii(cs, start, end)
+            out += new String(cs, start, end - start)
+          }
+        }
+      }
+    }
+    out.toArray
+  }
+
+  /** [[minimalStem]] in place on `cs(start until end)`; returns the new end. */
+  private def stemAscii(cs: Array[Char], start: Int, end: Int): Int = {
+    if (end - start < 3 || cs(end - 1) != 's') return end
+    cs(end - 2) match {
+      case 'u' | 's' => end
+      case 'e' =>
+        val c3 = cs(end - 3)
+        if (end - start > 3 && c3 == 'i' && cs(end - 4) != 'a' && cs(end - 4) != 'e') {
+          cs(end - 3) = 'y'
+          end - 2
+        } else if (c3 == 'i' || c3 == 'a' || c3 == 'o' || c3 == 'e') end
+        else end - 1
+      case _ => end - 1
+    }
   }
 
   /** ICU folding: NFKC + case fold (NFKC_Casefold), then canonical decompose
@@ -163,19 +299,14 @@ object Analyzer extends Serializable {
   }
 
   /** Full text_en chain; empty tokens (possible after folding away a token
-    * consisting only of marks/ignorables) are dropped.
+    * consisting only of marks/ignorables) are dropped. All-ASCII regions
+    * take the exact fast path ([[segment]]).
     */
-  def analyze(text: String): Array[String] = {
-    val raw = tokenize(text)
-    val out = new ArrayBuffer[String](raw.length)
-    var i = 0
-    while (i < raw.length) {
-      val t = minimalStem(stripPossessive(fold(raw(i)))).trim
-      if (t.nonEmpty) out += t
-      i += 1
-    }
-    out.toArray
-  }
+  def analyze(text: String): Array[String] = segment(text, analyzed = true)
+
+  /** The ICU-only text_en chain: the reference [[analyze]] must match. */
+  private[graft] def analyzeIcu(text: String): Array[String] =
+    tokenizeIcu(text).map(t => minimalStem(stripPossessive(fold(t))).trim).filter(_.nonEmpty)
 
   /** KeywordTokenizer + ICUFolding + Trim (the schema's `alphaSort` chain,
     * schema.xml:124-131): whole value as one token.

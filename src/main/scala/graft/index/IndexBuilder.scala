@@ -38,11 +38,16 @@ case class IndexConfig(
 
 /** Inverted-index build pipeline (SURVEY.md §3.1 step 7, §7.2 module 5):
   *
-  *   docs -> stable docIds -> docstats (per-field lengths + sha256)
-  *        -> typed flatMap tokenize -> (bucket, field, term, salt, docId, tf)
-  *        -> repartition(bucket, field, salt) -> sortWithinPartitions
-  *        -> mapPartitions streaming block encoder -> posting runs (parquet)
+  *   docs -> stable docIds
+  *        -> fused map pass: Analyzer.analyzeField per field, counted token
+  *           by token into [[ChunkEncoder]] block buffers -> docstats rows
+  *           (per-field lengths + sha256) + pre-encoded [[BlockChunk]]s
+  *        -> repartition(term, field, salt) -> sortWithinPartitions
+  *        -> [[RunAssembler]] concatenates blocks -> posting runs (parquet)
   *        -> dictionary (global df/cf) -> lineage rows -> snapshot commit
+  *
+  * No per-doc term -> tf map is built: [[ChunkEncoder]] counts tfs in place
+  * in its buffers, so analysis output goes straight to the block encoder.
   *
   * Layout under `outDir`:
   *   docstats/    (docId, repo, path, commit, lang, sha, salt, len*)
@@ -52,8 +57,8 @@ case class IndexConfig(
   *   snapshots/, SNAPSHOT — snaptable commit ([[Snapshot]])
   *
   * Scale notes (the 100 TB design):
-  *  - ONE wide shuffle total (the posting repartition). docstats is map-only;
-  *    tokenizing twice trades CPU for not shuffling tokens twice.
+  *  - ONE wide shuffle total (the posting repartition). docstats is map-only
+  *    and comes out of the same tokenize pass as the posting chunks.
   *  - docId assignment is deterministic (global rank over a unique key), so
   *    stages recompute it instead of joining back — resume never needs the
   *    raw corpus co-shuffled with committed stages.
@@ -110,24 +115,6 @@ object IndexBuilder {
         }
       }
       .toDF("docId", "sha", "repo", "path", "commit", "lang", "content")
-  }
-
-  /** Tokenize one field value into (length, term -> tf) in first-seen order.
-    * Shared by the posting flatMap and the docstats map so lengths agree.
-    */
-  def termFreqs(field: String, text: String): (Int, java.util.LinkedHashMap[String, Integer]) = {
-    val toks = Analyzer.analyzeField(field, text)
-    // java LinkedHashMap + Integer cache: no per-token Option/Some allocation
-    // (tf values <= 127 box for free), insertion order preserved
-    val m = new java.util.LinkedHashMap[String, Integer](math.max(8, toks.length * 2))
-    var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      val c = m.get(t)
-      m.put(t, if (c == null) Integer.valueOf(1) else Integer.valueOf(c.intValue + 1))
-      i += 1
-    }
-    (toks.length, m)
   }
 
   /** Dictionary write: global per-(field, term) df/cf from run-level rows,
@@ -307,18 +294,14 @@ object IndexBuilder {
           }
       }
     // persist only when both stages consume it (a resumed postings-only build
-    // reads the fused pass once — no point caching). Storage level knob:
-    // MEMORY_AND_DISK columnar is the measured winner here (DISK_ONLY
-    // serialized rows cost 23.6k -> 14.5k docs/s at 1.6M/16c: BuildEmit's
-    // binary payloads serialize poorly row-wise but pack well columnar) —
-    // the OPPOSITE of the withDocIds corpus cache, where rows are wide text.
+    // reads the fused pass once — no point caching). MEMORY_AND_DISK
+    // columnar is the measured winner here (DISK_ONLY serialized rows cost
+    // 23.6k -> 14.5k docs/s at 1.6M/16c: BuildEmit's binary payloads
+    // serialize poorly row-wise but pack well columnar) — the OPPOSITE of
+    // the withDocIds corpus cache, where rows are wide text.
     val needBoth = needDocstats && needPostings
-    val emitLevel = sys.env.get("SPARK_GRAFT_EMIT_CACHE") match {
-      case Some("DISK_ONLY") => org.apache.spark.storage.StorageLevel.DISK_ONLY
-      case _ => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    }
     lazy val src: Dataset[BuildEmit] =
-      if (needBoth) emitted.persist(emitLevel)
+      if (needBoth) emitted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else emitted
 
     // ---- stage: docstats (map-side rows out of the fused pass; the timed
@@ -394,8 +377,13 @@ object IndexBuilder {
 /** Map-side pre-encoding combiner. Feed docs in increasing docId order (the
   * natural withDocIds partition order); per (field, term) it accumulates
   * (docId, tf) in a small growable buffer and emits a finished
-  * delta+varint-encoded [[BlockChunk]] whenever the buffer reaches
-  * `blockSize`. Everything buffered is flushed every `chunkDocs` docs
+  * delta+varint-encoded [[BlockChunk]] once the buffer holds `blockSize`
+  * postings. Each token costs one map probe: a term whose last posting is
+  * this doc bumps that tf in place, any other term appends a posting with
+  * tf 1. The block cut is lazy — a full buffer is cut when the term's next
+  * doc arrives (or at a flush), never while its last doc may still be
+  * counting — so the blocks are the ones an eager cut after each whole doc
+  * would make. Everything buffered is flushed every `chunkDocs` docs
   * (bounding memory to the chunk's distinct-term count × a tail buffer) and
   * at salt boundaries (blocks never span salts). Buffers grow 4 → blockSize
   * by doubling, so the Zipf tail (df 1–2 per chunk) pays ~4 slots, not 128.
@@ -403,33 +391,42 @@ object IndexBuilder {
 final class ChunkEncoder(blockSize: Int, saltRange: Long, chunkDocs: Int) {
   private val fieldNames = Array("content", "path", "repo")
 
-  private final class Buf {
+  private final class Buf(val term: String) {
     var docs = new Array[Long](4)
     var tfs = new Array[Int](4)
     var n = 0
     var maxTf = 0
     var minQL = Int.MaxValue
     var cf = 0L
-    def add(docId: Long, tf: Int, ql: Int): Unit = {
-      if (n == docs.length) {
-        val cap = math.min(blockSize, docs.length * 2)
-        docs = java.util.Arrays.copyOf(docs, cap)
-        tfs = java.util.Arrays.copyOf(tfs, cap)
+    /** Count one occurrence of the term in doc `docId` (field length quantized to `ql`). */
+    def count(docId: Long, ql: Int, out: mutable.ArrayBuffer[BlockChunk], fi: Int): Unit = {
+      if (n > 0 && docs(n - 1) == docId) {
+        val tf = tfs(n - 1) + 1
+        tfs(n - 1) = tf
+        if (tf > maxTf) maxTf = tf
+      } else {
+        if (n == blockSize) out += cut(fi, this)
+        else if (n == docs.length) {
+          val cap = math.min(blockSize, docs.length * 2)
+          docs = java.util.Arrays.copyOf(docs, cap)
+          tfs = java.util.Arrays.copyOf(tfs, cap)
+        }
+        docs(n) = docId; tfs(n) = 1; n += 1
+        if (maxTf == 0) maxTf = 1
+        if (ql < minQL) minQL = ql
       }
-      docs(n) = docId; tfs(n) = tf; n += 1
-      if (tf > maxTf) maxTf = tf
-      if (ql < minQL) minQL = ql
-      cf += tf
+      cf += 1
     }
     def reset(): Unit = { n = 0; maxTf = 0; minQL = Int.MaxValue; cf = 0L }
   }
 
-  private val bufs = Array.fill(3)(mutable.HashMap.empty[String, Buf])
+  private val bufs = Array.fill(3)(new java.util.HashMap[String, Buf]())
+  private val newBuf: java.util.function.Function[String, Buf] = new Buf(_)
   private var curSalt = -1
   private var docsSinceFlush = 0
 
-  private def cut(fi: Int, term: String, b: Buf): BlockChunk = {
-    val c = BlockChunk(fi.toByte, term, curSalt,
+  private def cut(fi: Int, b: Buf): BlockChunk = {
+    val c = BlockChunk(fi.toByte, b.term, curSalt,
       firstDoc = b.docs(0), lastDoc = b.docs(b.n - 1), n = b.n,
       maxTf = b.maxTf, minQuantLen = b.minQL, cf = b.cf,
       docsDelta = Codec.encodeDocIds(java.util.Arrays.copyOf(b.docs, b.n)),
@@ -441,7 +438,8 @@ final class ChunkEncoder(blockSize: Int, saltRange: Long, chunkDocs: Int) {
   private def flushInto(out: mutable.ArrayBuffer[BlockChunk]): Unit = {
     var fi = 0
     while (fi < 3) {
-      bufs(fi).foreach { case (term, b) => if (b.n > 0) out += cut(fi, term, b) }
+      val it = bufs(fi).values().iterator()
+      while (it.hasNext) { val b = it.next(); if (b.n > 0) out += cut(fi, b) }
       bufs(fi).clear()
       fi += 1
     }
@@ -463,15 +461,14 @@ final class ChunkEncoder(blockSize: Int, saltRange: Long, chunkDocs: Int) {
     val lens = new Array[Int](3)
     var fi = 0
     while (fi < 3) {
-      val (len, tfs) = IndexBuilder.termFreqs(fieldNames(fi), fieldVals(fi))
-      lens(fi) = len
-      val ql = SmallFloat.quantizeLength(len)
-      val eit = tfs.entrySet().iterator()
-      while (eit.hasNext) {
-        val e = eit.next()
-        val b = bufs(fi).getOrElseUpdate(e.getKey, new Buf)
-        b.add(docId, e.getValue.intValue, ql)
-        if (b.n == blockSize) out += cut(fi, e.getKey, b)
+      val toks = Analyzer.analyzeField(fieldNames(fi), fieldVals(fi))
+      lens(fi) = toks.length
+      val ql = SmallFloat.quantizeLength(toks.length)
+      val m = bufs(fi)
+      var i = 0
+      while (i < toks.length) {
+        m.computeIfAbsent(toks(i), newBuf).count(docId, ql, out, fi)
+        i += 1
       }
       fi += 1
     }
@@ -483,7 +480,7 @@ final class ChunkEncoder(blockSize: Int, saltRange: Long, chunkDocs: Int) {
 
   def flushAll(): Seq[BlockChunk] = {
     val out = mutable.ArrayBuffer.empty[BlockChunk]
-    if (docsSinceFlush > 0 || bufs.exists(_.nonEmpty)) flushInto(out)
+    if (docsSinceFlush > 0 || bufs.exists(!_.isEmpty)) flushInto(out)
     out.toSeq
   }
 }

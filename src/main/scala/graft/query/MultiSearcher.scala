@@ -288,15 +288,20 @@ class MultiSearcher(spark: SparkSession, segmentDirs: Seq[String]) {
 
   lazy val totalDocs: Long = segments.map(_.meta.nDocs).sum
 
-  /** Global average field length: length sums merged across segments. */
+  /** Global average field length: length sums merged across segments.
+    * A segment stores avg = Σlen / nDocs; round(avg × nDocs) gives back its
+    * exact Σlen (the two roundings err by at most Σlen × 2^-52, below ½
+    * while Σlen < 2^51), so the result is bit-identical to the Σlen / N an
+    * [[graft.index.IndexBuilder]] build of all the segments' docs computes.
+    */
   lazy val globalAvgLen: Map[String, Double] = {
-    val sums = mutable.Map.empty[String, Double]
+    val sums = mutable.Map.empty[String, Long]
     segments.foreach { s =>
       s.meta.avgLen.foreach { case (f, avg) =>
-        sums(f) = sums.getOrElse(f, 0.0) + avg * s.meta.nDocs
+        sums(f) = sums.getOrElse(f, 0L) + math.round(avg * s.meta.nDocs)
       }
     }
-    sums.map { case (f, sum) => f -> sum / totalDocs }.toMap
+    sums.map { case (f, sum) => f -> sum.toDouble / totalDocs }.toMap
   }
 
   def globalDf(key: (String, String)): Long =

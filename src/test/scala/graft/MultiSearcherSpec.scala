@@ -1,7 +1,7 @@
 package graft
 
 import graft.corpus.CodeCorpus
-import graft.index.{IndexBuilder, IndexConfig}
+import graft.index.{IndexBuilder, IndexConfig, IndexMeta, Snapshot}
 import graft.query.{MultiSearcher, Searcher}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -72,10 +72,30 @@ class MultiSearcherSpec extends AnyFunSuite {
     val single = new Searcher(spark, combinedDir)
     assert(multi.totalDocs == single.meta.nDocs)
     multi.globalAvgLen.foreach { case (f, avg) =>
-      assert(math.abs(avg - single.meta.avgLen(f)) < 1e-9, s"avgLen($f)")
+      assert(avg == single.meta.avgLen(f), s"avgLen($f)")
     }
     assert(multi.globalDf(("content", "buffer")) ==
       single.dfOf(Set(("content", "buffer")))(("content", "buffer")))
+  }
+
+  test("global stats merge over 3 segments: N and avgLen bit-identical") {
+    // [0, 210) + [210, 510) + [510, 1200) against the merged [0, 1200): a
+    // split where Σ(avg × nDocs) / N is one ulp off Σlen / N for content
+    val dirs = Seq(0L -> 210L, 210L -> 510L, 510L -> 1200L).map { case (lo, hi) =>
+      val d = java.nio.file.Files.createTempDirectory("multi3").toString
+      IndexBuilder.build(spark, spark.range(lo, hi).as[Long].map(i => CodeCorpus.genDoc(i, 15)), d, cfg)
+      d
+    }
+    val multi = new MultiSearcher(spark, dirs)
+    val single = new Searcher(spark, combinedDir)
+    val metas = dirs.map(d => IndexMeta.fromProps(new Snapshot(d).readProps()))
+    assert(metas.map(m => m.avgLen("content") * m.nDocs).sum / multi.totalDocs !=
+      single.meta.avgLen("content"), "the split no longer exercises the ulp case")
+    assert(multi.totalDocs == single.meta.nDocs)
+    assert(multi.globalAvgLen.keySet == single.meta.avgLen.keySet)
+    multi.globalAvgLen.foreach { case (f, avg) =>
+      assert(avg == single.meta.avgLen(f), s"avgLen($f)")
+    }
   }
 
   test("per-segment norms built once, reused across repeated queries") {

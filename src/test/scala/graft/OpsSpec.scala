@@ -685,4 +685,17 @@ class OpsSpec extends AnyFunSuite {
       .collect().head.getSeq[Long](0)
     assert(sk.sum == 6L, "3 non-null values x 2 rows")
   }
+
+  test("q_cosine_topk without a query vector: empty result, same schema") {
+    val dir = java.nio.file.Files.createTempDirectory("cosq").toString
+    val emb = spark.read.parquet(embPath)
+    emb.write.parquet(s"$dir/embeddings.parquet")
+    val withQ = graft.RelationalQueries.queries("q_cosine_topk")(spark, dir)
+    assert(withQ.collect().nonEmpty)
+    val noQDir = java.nio.file.Files.createTempDirectory("cosnoq").toString
+    emb.filter($"vec_id" =!= 0).write.parquet(s"$noQDir/embeddings.parquet")
+    val noQ = graft.RelationalQueries.queries("q_cosine_topk")(spark, noQDir)
+    assert(noQ.collect().isEmpty)
+    assert(noQ.schema == withQ.schema)
+  }
 }

@@ -4,8 +4,9 @@
 Committed-golden VALUES oracles are regression pins the engine itself
 produced, so a commit that BOTH changes engine behavior AND re-pins a golden
 can silently re-pin a regression. This walks a commit range and flags any
-commit whose diff touches a golden VALUES block (EngineQueries.scala oracle
-constants) AND engine source (core/ analysis/ index/ query/ kernels/codec).
+commit whose diff touches engine source (core/ analysis/ index/ query/
+kernels/codec) AND either a golden VALUES block (EngineQueries.scala oracle
+constants) or the rank golden (fixtures/golden_topk.tsv).
 
 Usage: python3 tools/check_golden_discipline.py [range]   (default HEAD~20..HEAD)
 Exit 1 if any commit violates the rule.
@@ -21,6 +22,7 @@ ENGINE_DIRS = (
     "src/main/scala/graft/query/",
 )
 GOLDEN_FILE = "src/main/scala/graft/EngineQueries.scala"
+RANK_GOLDEN = "fixtures/golden_topk.tsv"
 
 
 def sh(*args):
@@ -35,6 +37,10 @@ def main():
         files = sh("git", "show", "--name-only", "--format=", c).split()
         if not any(f.startswith(d) for f in files for d in ENGINE_DIRS):
             continue
+        subj = sh("git", "log", "-1", "--format=%h %s", c).strip()
+        if RANK_GOLDEN in files:
+            bad.append(f"{subj} (re-pins {RANK_GOLDEN})")
+            continue
         if GOLDEN_FILE not in files:
             continue
         # engine + oracle file in one commit: only a violation if the diff
@@ -48,7 +54,6 @@ def main():
             if line[:1] in "+-" and not line.startswith(("+++", "---"))
         )
         if touched_values:
-            subj = sh("git", "log", "-1", "--format=%h %s", c).strip()
             bad.append(subj)
     if bad:
         print("GOLDEN DISCIPLINE VIOLATION — commits regenerating goldens "
